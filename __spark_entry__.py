@@ -429,10 +429,12 @@ FROM documents WHERE source IS NOT NULL AND regexp_matches(source, '^src1')
 GROUP BY source
 """)
 def _q9b(spark, sf):
-    """Fused pass-2: BOTH violated expectations' SUMMARY value counts come
-    from ONE shared scan + one groupBy((eid, value)) shuffle
-    (validator.py _collect_violations_fused) instead of a full re-scan per
-    expectation. Violated value cardinality (4 + 11) < partial cap, so the
+    """Pass 2 at SUMMARY: BOTH violated expectations' value counts come
+    from ONE value query — one shared scan, one groupBy((eid, value))
+    shuffle and one row_number cut per expectation (validator.py
+    _collect_value_counts) — instead of a full re-scan per expectation.
+    fuse_violations only picks COMPLETE's row path, so it does not change
+    this query. Violated value cardinality (4 + 11) < partial cap, so the
     reported counts are the complete per-value violation histogram."""
     from great_expectations_spark.plans.compiler import Options
 

@@ -22,7 +22,8 @@ Each expectation compiles to a ``Compiled`` record declaring:
 Unlike the reference (each eager metric = its own Spark action; dozens of
 jobs per suite), a suite of N expectations here costs: 1 fused agg + 1
 optional wave-2 agg + one job per uniqueness/referential/distribution-eager
-expectation + one bounded job per violated map expectation.
+expectation + violation detail (BASIC: one bounded job per violated
+expectation; SUMMARY: one value query for all of them).
 """
 
 from __future__ import annotations
@@ -63,15 +64,16 @@ class Options:
     exact_median: bool = True
     # parameterized-KS sample bound (scipy runs on the driver)
     ks_sample_cap: int = 100_000
-    # pass-2 fusion: extract violation detail for ALL violated map
-    # expectations in ONE early-stopping scan (+ one shuffle for SUMMARY
-    # counts) instead of up to three bounded jobs PER violated expectation.
+    # COMPLETE's pass-2 row path (unexpected_list, index lists, rows):
+    # fusion extracts them for ALL violated map expectations in ONE
+    # early-stopping scan instead of bounded jobs PER violated expectation.
     # At 10^12 rows with several violated expectations the per-expectation
     # plan re-scans the table E times; the fused plan scans once. Below a
     # few million rows the per-expectation jobs are cheaper than the fused
     # plan's fixed cost (Python workers + a window), so None = adaptive:
     # fuse when the scanned row count or the violated-expectation count
-    # crosses the thresholds. True/False force either plan.
+    # crosses the thresholds. True/False force either plan. BASIC and the
+    # SUMMARY value counts do not depend on it.
     fuse_violations: bool | None = None
     fuse_rows_threshold: int = 5_000_000
     fuse_count_threshold: int = 6
@@ -1091,30 +1093,34 @@ def _uniqueness_compiler(name: str, cols_fn: Callable[[dict[str, Any]], list[str
                 F.coalesce(F.sum("__n"), F.lit(0)).alias("dup_rows"),
                 F.count(F.lit(1)).alias("dup_keys"),
             ).first()
-            # violation frame for pass 2: LEFT SEMI join of the rows against
-            # the duplicated keys — reuses the dup-key frame the count path
-            # already built; unlike a Window.partitionBy(key) sample, a
-            # skewed dup key never funnels through one task. NULL-SAFE join
-            # keys (groupBy treats NULL as a value, so the list must too)
-            # and full source rows kept so index columns /
-            # include_unexpected_rows still resolve downstream.
+            # row-level violation frame (BASIC list, COMPLETE lists and
+            # rows): LEFT SEMI join of the rows against the duplicated keys;
+            # unlike a Window.partitionBy(key) sample, a skewed dup key
+            # never funnels through one task. NULL-SAFE join keys (groupBy
+            # treats NULL as a value, so the list must too) and full source
+            # rows kept so index columns / include_unexpected_rows resolve.
             key_struct = F.struct(*[F.col(c).alias(c) for c in cols])
+            value = F.col(cols[0]) if single else key_struct
             dk = dup_keys_df.select(
                 *[F.col(c).alias(f"__dk_{c}") for c in cols])
             join_cond = None
             for c in cols:
                 p = F.col(c).eqNullSafe(F.col(f"__dk_{c}"))
                 join_cond = p if join_cond is None else (join_cond & p)
-            vdf = (
-                d.join(dk, on=join_cond, how="left_semi")
-                .withColumn(
-                    "__value", F.col(cols[0]) if single else key_struct)
-            )
-            return {
+            vdf = d.join(dk, on=join_cond, how="left_semi").withColumn("__value", value)
+            out = {
                 k_unexp: int(dup["dup_rows"]),
                 f"dup_keys|{config.id}": int(dup["dup_keys"]),
                 f"__violations_df__|{config.id}": vdf,
             }
+            rf = metrics.get("__rf__")
+            if rf is None or rf.at_least("SUMMARY"):
+                # pass 2's value counts: the dup keys with their row counts
+                # ARE the violation histogram, no join back to the rows
+                # (built only when read: each DataFrame costs an analysis)
+                out[f"__value_counts__|{config.id}"] = dup_keys_df.select(
+                    value.alias("__value"), "__n")
+            return out
 
         def finalize(metrics: Metrics) -> EVR:
             return _map_finalize(config, metrics, k_elem, k_missing, k_unexp)

@@ -13,16 +13,25 @@ validator/validation_graph.py:209-347):
   pass 1b optional second fused agg for value-dependent expressions (z-scores)
   eager   one shaped job per uniqueness / referential / distribution
           expectation (groupBy or anti-join)
-  pass 2  violation extraction: one BOUNDED job per *violated* map
-          expectation (limit k; skipped entirely when counts are clean or
-          result_format is BOOLEAN_ONLY)
+  pass 2  violation detail for *violated* expectations only (skipped
+          entirely when counts are clean or result_format is BOOLEAN_ONLY):
+          BASIC runs one early-exit ``limit k`` job per expectation;
+          SUMMARY and COMPLETE get partial_unexpected_counts and
+          partial_unexpected_list for ALL of them from ONE value query that
+          stays in the JVM (``_collect_value_counts``); COMPLETE's row-level
+          lists, index lists and rows add the fused or per-expectation row
+          path. A failed value query is recorded in
+          ``meta["degradations"]``, never re-run per expectation.
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import math
 import time
 import traceback
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -187,6 +196,62 @@ def _from_json_value(v: Any, dt: T.DataType) -> Any:
     if isinstance(dt, T.MapType):
         return {k: _from_json_value(x, dt.valueType) for k, x in v.items()}
     return v
+
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _value_key(value: Column, dt: T.DataType) -> tuple[Column, Column, Callable[[str], Any]]:
+    """How one expectation's violation values ride the shared value query:
+    ``(s, d, decode)``. ``s`` is a string that identifies the value exactly
+    (the group key, NULL for a NULL value), ``d`` a double that orders
+    numeric and temporal values natively at the top-k cut (NULL for the
+    rest, which order by ``s``), and ``decode`` turns ``s`` back into the
+    Python value the row paths emit. Strings group raw and numbers get a
+    plain cast, so the common types pay for no JSON rendering or parsing
+    per group; the rest use the fused row path's typed JSON encoding, and
+    types it cannot round-trip report their Spark string rendering."""
+    d: Column | None = None
+    if isinstance(dt, T.StringType):
+        s, decode = value, str
+    elif isinstance(dt, _INTEGRAL):
+        s, d, decode = value.cast("string"), value.cast("double"), int
+    elif isinstance(dt, (T.FloatType, T.DoubleType)):
+        # -0.0 groups with 0.0, as in a native groupBy
+        d = F.when(value == 0, F.lit(0.0)).otherwise(value.cast("double"))
+        s, decode = d.cast("string"), float
+    elif isinstance(dt, T.DecimalType):
+        import decimal
+
+        s, d, decode = value.cast("string"), value.cast("double"), decimal.Decimal
+    elif isinstance(dt, T.BooleanType):
+        s, d, decode = value.cast("string"), value.cast("double"), lambda x: x == "true"
+    elif isinstance(dt, T.BinaryType):
+        s, decode = F.hex(value), bytes.fromhex  # hex order is byte order
+    elif _json_safe(dt):
+        s = F.to_json(F.struct(_fuse_encode(value, dt).alias("v")),
+                      {"ignoreNullFields": "false"})
+        if isinstance(dt, T.TimestampType):
+            d = F.unix_micros(value)
+        elif isinstance(dt, T.DateType):
+            d = F.unix_date(value)
+
+        def decode(x: str) -> Any:
+            return _from_json_value(json.loads(x)["v"], dt)
+    else:
+        s, decode = value.cast("string"), str
+    d = F.lit(None) if d is None else d
+    return F.when(value.isNotNull(), s), d.cast("double"), decode
+
+
+def _native_order(v: Any) -> tuple:
+    """Python sort key matching Spark's ascending order: NULL first, NaN
+    after every other number."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and math.isnan(v):
+        return (2,)
+    return (1, v)
 
 
 def _partition_capper(need: int, n_eids: int):
@@ -386,10 +451,10 @@ class SparkValidator:
                     compiled[i] = (config, comp, EVR.exception(
                         config, str(e), traceback.format_exc()))
 
-        # ---- pass 2: bounded violation extraction ------------------------
+        # ---- pass 2: violation detail -------------------------------------
+        degradations: list[dict[str, Any]] = []
         if self.rf.at_least("BASIC"):
-            fusable: list[tuple[ExpectationConfiguration, Compiled, Any, Any]] = []
-            singles: list[tuple[ExpectationConfiguration, Compiled]] = []
+            violated: list[tuple[ExpectationConfiguration, Compiled, Any]] = []
             for config, comp, err in compiled:
                 if comp is None or err is not None:
                     continue
@@ -413,34 +478,17 @@ class SparkValidator:
                         kernel = comp.kernel2(metrics)
                     except Exception:
                         kernel = None
-                vtype = (
-                    self._fused_value_type(kernel)
-                    if (
-                        self.options.fuse_violations is not False
-                        and f"__violations_df__|{config.id}" not in metrics
-                        and kernel is not None
-                    )
-                    else None
-                )
-                if vtype is not None:
-                    fusable.append((config, comp, kernel, vtype))
-                else:
-                    singles.append((config, comp))
-            if not self._should_fuse(fusable, metrics):
-                singles.extend((c, comp) for c, comp, _k, _t in fusable)
-                fusable = []
-            if fusable:
+                if kernel is not None or f"__violations_df__|{config.id}" in metrics:
+                    violated.append((config, comp, kernel))
+            if violated and self.rf.at_least("SUMMARY"):
                 try:
-                    metrics.update(self._collect_violations_fused(fusable, metrics))
-                except Exception:
-                    # best-effort detail: fall back to the per-expectation
-                    # bounded jobs so a fused-plan failure can't drop lists
-                    singles.extend((c, comp) for c, comp, _k, _t in fusable)
-            for config, comp in singles:
-                try:
-                    metrics.update(self._collect_violations(config, comp, metrics))
-                except Exception:
-                    pass  # lists are best-effort detail; counts already exact
+                    metrics.update(self._collect_value_counts(violated, metrics))
+                except Exception as e:
+                    # detail only: counts and success are already exact
+                    degradations.append({"phase": "pass2", "error": type(e).__name__})
+            if violated and (self.rf.tier == "BASIC" or self.rf.at_least("COMPLETE")
+                             or self.rf.include_unexpected_rows):
+                self._collect_rows(violated, metrics, degradations)
 
         # release any frames eager ops persisted for pass-2 consistency
         for key, v in list(metrics.items()):
@@ -466,6 +514,8 @@ class SparkValidator:
             "validation_time_s": round(time.time() - t0, 4),
             "result_format": self.rf.tier,
         }
+        if degradations:
+            meta["degradations"] = degradations
         return SuiteValidationResult.from_results(results, suite_name=self.suite.name, meta=meta)
 
     # ------------------------------------------------------------- helpers
@@ -505,12 +555,150 @@ class SparkValidator:
                         config, comp, EVR.exception(config, str(e), traceback.format_exc())
                     )
 
+    def _collect_value_counts(
+        self,
+        violated: list[tuple[ExpectationConfiguration, Compiled, Any]],
+        metrics: dict[str, Any],
+    ) -> dict[str, Any]:
+        """ONE Spark action, all in the JVM, gives partial_unexpected_counts
+        and partial_unexpected_list for every violated expectation:
+
+        * map kernels emit ``when(unexpected, struct(eid, value))`` entries
+          from one scan, exploded and counted per ``(eid, value)``;
+        * eager ops contribute a ``(value, n)`` frame — uniqueness its
+          dup-key groupBy, the others a groupBy of their violation frame;
+        * the union is cut by one ``row_number()`` per eid, filtered
+          directly on the rank, so Spark plans a partial WindowGroupLimit
+          below the shuffle and no expectation with millions of distinct
+          bad values funnels through one task.
+
+        The ``k + 200`` margin absorbs count-tied groups the cut orders
+        differently from the typed Python re-sort (structs, arrays, decimals
+        past double precision). The list expands the reported top groups in
+        order until it holds k values: a deterministic sample that does not
+        depend on the partition layout."""
+        k = self.rf.partial_unexpected_count
+        query, decoders = self._value_counts_query(violated, metrics)
+        by_eid: dict[int, list[tuple[Any, int]]] = {}
+        for r in query.collect():
+            s = r["s"]
+            by_eid.setdefault(r["eid"], []).append(
+                (None if s is None else decoders[r["eid"]](s), int(r["n"])))
+
+        out: dict[str, Any] = {}
+        for eid, (config, _comp, kernel) in enumerate(violated):
+            items = by_eid.get(eid, [])
+            try:
+                items.sort(key=lambda t: (-t[1], _native_order(t[0])))
+            except TypeError:  # unorderable values (dicts): stable JSON order
+                items.sort(key=lambda t: (-t[1], json.dumps(t[0], default=str)))
+            if kernel is not None and kernel.value_format == "pair":
+                items = [([v.get(c) for c in kernel.columns]
+                          if isinstance(v, dict) else v, n) for v, n in items]
+            top = items[:k]
+            sample: list[Any] = []
+            for v, n in top:
+                sample.extend([v] * min(n, k - len(sample)))
+            out[f"partial_unexpected_counts|{config.id}"] = [
+                {"value": v, "count": n} for v, n in top]
+            out[f"partial_unexpected_list|{config.id}"] = sample
+        return out
+
+    def _value_counts_query(
+        self,
+        violated: list[tuple[ExpectationConfiguration, Compiled, Any]],
+        metrics: dict[str, Any],
+    ) -> tuple[DataFrame, list[Callable[[str], Any]]]:
+        """The value query ``(eid, s, d, n)`` cut to the top ``k + 200``
+        groups per eid, and each eid's decoder for ``s``."""
+        entries: list[Column] = []
+        frames: list[DataFrame] = []
+        decoders: list[Callable[[str], Any]] = []
+        for eid, (config, _comp, kernel) in enumerate(violated):
+            vdf = metrics.get(f"__violations_df__|{config.id}")
+            if vdf is not None:
+                vc = metrics.get(f"__value_counts__|{config.id}")
+                if vc is None:
+                    vc = vdf.groupBy("__value").agg(F.count(F.lit(1)).alias("__n"))
+                s, d, decode = _value_key(F.col("__value"), vc.schema["__value"].dataType)
+                frames.append(vc.select(
+                    F.lit(eid).alias("eid"), s.alias("s"), d.alias("d"),
+                    F.col("__n").cast("long").alias("n")))
+            else:
+                vt = self.df.select(kernel.value.alias("x")).schema[0].dataType
+                s, d, decode = _value_key(kernel.value, vt)
+                unexpected = kernel.include & F.coalesce(~kernel.ok, F.lit(False))
+                entries.append(F.when(unexpected, F.struct(
+                    F.lit(eid).alias("eid"), s.alias("s"), d.alias("d"))))
+            decoders.append(decode)
+        if entries:
+            frames.insert(0, (
+                self.df.select(F.explode(F.array_compact(F.array(*entries))).alias("e"))
+                .select("e.eid", "e.s", "e.d")
+                .groupBy("eid", "s", "d")
+                .agg(F.count(F.lit(1)).alias("n"))
+            ))
+        w = Window.partitionBy("eid").orderBy(F.desc("n"), F.asc("d"), F.asc("s"))
+        query = (
+            functools.reduce(DataFrame.unionByName, frames)
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= self.rf.partial_unexpected_count + 200)
+        )
+        return query, decoders
+
+    def _collect_rows(
+        self,
+        violated: list[tuple[ExpectationConfiguration, Compiled, Any]],
+        metrics: dict[str, Any],
+        degradations: list[dict[str, Any]],
+    ) -> None:
+        """Row-level detail: BASIC's early-exit sample, COMPLETE's lists,
+        index lists and index query, and ``unexpected_rows``. COMPLETE may
+        take every map kernel through one fused scan (``_should_fuse``);
+        everything else runs one bounded job per expectation."""
+        fusable: list[tuple[ExpectationConfiguration, Compiled, Any, Any]] = []
+        singles: list[tuple[ExpectationConfiguration, Compiled]] = []
+        for config, comp, kernel in violated:
+            vtype = (
+                self._fused_value_type(kernel)
+                if (
+                    self.rf.at_least("COMPLETE")
+                    and self.options.fuse_violations is not False
+                    and f"__violations_df__|{config.id}" not in metrics
+                    and kernel is not None
+                )
+                else None
+            )
+            if vtype is not None:
+                fusable.append((config, comp, kernel, vtype))
+            else:
+                singles.append((config, comp))
+        if not self._should_fuse(fusable, metrics):
+            singles.extend((c, comp) for c, comp, _k, _t in fusable)
+            fusable = []
+        if fusable:
+            try:
+                metrics.update(self._collect_violations_fused(fusable, metrics))
+            except Exception as e:
+                # the per-expectation jobs still deliver the lists, but the
+                # fan-out to E scans is recorded, not silent
+                degradations.append({"phase": "pass2_rows", "error": type(e).__name__,
+                                     "fallback": "per_expectation"})
+                singles.extend((c, comp) for c, comp, _k, _t in fusable)
+        for config, comp in singles:
+            try:
+                metrics.update(self._collect_violations(config, comp, metrics))
+            except Exception as e:  # detail only: counts already exact
+                degradations.append({"phase": "pass2", "error": type(e).__name__,
+                                     "expectation_id": config.id})
+
     def _should_fuse(self, fusable: list, metrics: dict[str, Any]) -> bool:
-        """Adaptive plan choice (AQE-style, from pass-1 statistics already
-        in hand): the fused plan saves (E-1) re-scans but pays a fixed cost
-        (Python workers + a window), so it wins when scans are expensive —
-        large scanned row counts — or when E alone makes per-expectation
-        jobs add up. ``Options.fuse_violations`` True/False overrides."""
+        """Adaptive choice of COMPLETE's row path (AQE-style, from pass-1
+        statistics already in hand): the fused plan saves (E-1) re-scans but
+        pays a fixed cost (Python workers + a window), so it wins when scans
+        are expensive — large scanned row counts — or when E alone makes
+        per-expectation jobs add up. ``Options.fuse_violations`` True/False
+        overrides."""
         if self.options.fuse_violations is True:
             return bool(fusable)  # explicit opt-in wins, even for one kernel
         if len(fusable) < 2:
@@ -550,20 +738,14 @@ class SparkValidator:
         fusable: list[tuple[ExpectationConfiguration, Compiled, Any, Any]],
         metrics: dict[str, Any],
     ) -> dict[str, Any]:
-        """ONE early-stopping scan extracts bounded violation detail for
-        every violated kernel expectation at once (vs one-to-three jobs per
-        expectation): each row emits an array entry per expectation it
-        violates, the exploded (eid, value) stream is capped per partition
-        with an early-exit mapInPandas, and a row_number window trims to
-        the per-expectation budget. SUMMARY value counts add one fused
-        groupBy((eid, value)) shuffle — map-side combined, skew-free —
-        replacing a full re-scan per expectation."""
-        import json as _json
-
+        """COMPLETE's row path in ONE early-stopping scan for every violated
+        kernel expectation at once (vs one-to-three jobs per expectation):
+        each row emits an array entry per expectation it violates, the
+        exploded (eid, value) stream is capped per partition with an
+        early-exit mapInPandas, and a row_number window trims to the
+        per-expectation budget."""
         rf = self.rf
-        k = rf.partial_unexpected_count
         cap = self.options.complete_list_cap
-        need = cap if rf.at_least("COMPLETE") else k
         idx_cols = [c for c in rf.unexpected_index_column_names]
         want_rows = bool(rf.include_unexpected_rows)
         schema = self.df.schema
@@ -587,12 +769,11 @@ class SparkValidator:
         )
 
         entries: list[Any] = []
-        vtypes: list[T.DataType] = []
         out: dict[str, Any] = {}
-        for eid, (config, comp, kernel, _vt) in enumerate(fusable):
+        for eid, (config, comp, kernel, vt) in enumerate(fusable):
             unexpected = kernel.include & F.coalesce(~kernel.ok, F.lit(False))
             vj = F.to_json(
-                F.struct(_fuse_encode(kernel.value, _vt).alias("v")), jopts)
+                F.struct(_fuse_encode(kernel.value, vt).alias("v")), jopts)
             entries.append(
                 F.when(
                     unexpected,
@@ -604,29 +785,21 @@ class SparkValidator:
                     ),
                 )
             )
-            vtypes.append(_vt)  # resolved once in _fused_value_type
-            if rf.at_least("COMPLETE") and rf.return_unexpected_index_query:
+            if rf.return_unexpected_index_query:
                 out[f"unexpected_index_query|{config.id}"] = _render_index_query(unexpected)
 
         ex = (
             self.df.select(F.explode(F.array_compact(F.array(*entries))).alias("e"))
             .select("e.eid", "e.vj", "e.ij", "e.rj")
         )
-
-        def fmt(v: Any, eid: int) -> Any:
-            kernel = fusable[eid][2]
-            if kernel.value_format == "pair" and isinstance(v, dict):
-                return [v.get(c) for c in kernel.columns]
-            return v
-
         capped = ex.mapInPandas(
-            _partition_capper(need, len(fusable)),
+            _partition_capper(cap, len(fusable)),
             schema="eid int, vj string, ij string, rj string",
         )
         w = Window.partitionBy("eid").orderBy("vj")
         rows = (
             capped.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= need)
+            .where(F.col("__rn") <= cap)
             .drop("__rn")
             .collect()
         )
@@ -634,82 +807,23 @@ class SparkValidator:
         for r in rows:
             by_eid.setdefault(r["eid"], []).append(r)
 
-        for eid, (config, comp, kernel, _vt) in enumerate(fusable):
-            rs = by_eid.get(eid, [])
-            vals = [
-                fmt(_from_json_value(_json.loads(r["vj"])["v"], vtypes[eid]), eid)
-                for r in rs
-            ]
-            out[f"partial_unexpected_list|{config.id}"] = vals[:k]
-            if want_rows:
-                limit = cap if rf.at_least("COMPLETE") else k
-                out[f"unexpected_rows|{config.id}"] = [
-                    {
-                        c: _from_json_value(_json.loads(r["rj"]).get(c), schema[c].dataType)
-                        for c in self.df.columns
-                    }
-                    for r in rs[:limit]
-                ]
-            if rf.at_least("COMPLETE"):
-                out[f"unexpected_list|{config.id}"] = vals[:cap]
-                if idx_cols:
-                    out[f"unexpected_index_list|{config.id}"] = [
-                        {
-                            c: _from_json_value(_json.loads(r["ij"]).get(c), schema[c].dataType)
-                            for c in idx_cols
-                        }
-                        for r in rs[:cap]
-                    ]
+        def decode(js: str, cols: list[str]) -> dict[str, Any]:
+            d = json.loads(js)
+            return {c: _from_json_value(d.get(c), schema[c].dataType) for c in cols}
 
-        if rf.at_least("SUMMARY"):
-            # tie-break surrogate so count-tied NUMERIC values rank in typed
-            # order (the per-expectation path orders by the native column):
-            # strip the {"v":...} wrapper and try_cast — numbers sort
-            # numerically, everything else falls back to the JSON string
-            num = F.expr(
-                "try_cast(regexp_replace(vj, '^\\\\{\"v\":|\\\\}$', '') as double)")
-            # string ties order by the UNESCAPED value (get_json_object),
-            # not the raw JSON — escaping ('"' -> '\\"') would otherwise
-            # rank strings differently from the native column order the
-            # per-expectation path uses, evicting the wrong values at the
-            # window cut; raw vj stays only as the final stable key
-            unesc = F.get_json_object(F.col("vj"), "$.v")
-            cw = Window.partitionBy("eid").orderBy(
-                F.desc("__n"), F.asc_nulls_last(num),
-                F.asc_nulls_last(unesc), F.asc("vj"))
-            crows = (
-                ex.groupBy("eid", "vj")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .withColumn("__rn", F.row_number().over(cw))
-                # +200 margin absorbs count-tied boundary groups before the
-                # typed re-sort below; residual: >200-way ties of ARRAY/
-                # STRUCT values (JSON order != native order) could still
-                # surface different tied entries than the per-expectation
-                # path — atomic types (the realistic case) are exact
-                .where(F.col("__rn") <= k + 200)
-                .collect()
-            )
-            counts_by_eid: dict[int, list] = {}
-            for r in crows:
-                counts_by_eid.setdefault(r["eid"], []).append(r)
-            for eid, (config, comp, kernel, _vt) in enumerate(fusable):
-                items = [
-                    (
-                        fmt(_from_json_value(_json.loads(r["vj"])["v"], vtypes[eid]), eid),
-                        int(r["__n"]),
-                    )
-                    for r in counts_by_eid.get(eid, [])
-                ]
-                # re-sort ties by TYPED value (the per-expectation path
-                # orders by the native column); fall back to the stable
-                # JSON-string order for unorderable values
-                try:
-                    items.sort(key=lambda t: (-t[1], t[0]))
-                except TypeError:
-                    items.sort(key=lambda t: (-t[1], _json.dumps(t[0], default=str)))
-                out[f"partial_unexpected_counts|{config.id}"] = [
-                    {"value": v, "count": n} for v, n in items[:k]
-                ]
+        for eid, (config, comp, kernel, vt) in enumerate(fusable):
+            rs = by_eid.get(eid, [])
+            vals = [_from_json_value(json.loads(r["vj"])["v"], vt) for r in rs]
+            if kernel.value_format == "pair":
+                vals = [[v.get(c) for c in kernel.columns] if isinstance(v, dict) else v
+                        for v in vals]
+            out[f"unexpected_list|{config.id}"] = vals
+            if want_rows:
+                out[f"unexpected_rows|{config.id}"] = [
+                    decode(r["rj"], self.df.columns) for r in rs]
+            if idx_cols:
+                out[f"unexpected_index_list|{config.id}"] = [
+                    decode(r["ij"], idx_cols) for r in rs]
         return out
 
     def _collect_violations(
@@ -772,20 +886,9 @@ class SparkValidator:
                 return [v.get(c) for c in kernel.columns]
             return v
 
-        rows = vdf.limit(k).collect()
-        out[f"partial_unexpected_list|{config.id}"] = [fmt(r["__v"]) for r in rows]
-
-        if self.rf.at_least("SUMMARY"):
-            counts = (
-                vdf.groupBy("__v")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .orderBy(F.desc("__n"), F.col("__v"))
-                .limit(k)
-                .collect()
-            )
-            out[f"partial_unexpected_counts|{config.id}"] = [
-                {"value": fmt(r["__v"]), "count": int(r["__n"])} for r in counts
-            ]
+        if self.rf.tier == "BASIC":  # higher tiers sample from the value query
+            rows = vdf.limit(k).collect()
+            out[f"partial_unexpected_list|{config.id}"] = [fmt(r["__v"]) for r in rows]
 
         if self.rf.at_least("COMPLETE"):
             full = vdf.limit(cap).collect()

@@ -1,9 +1,10 @@
-"""Fused pass-2 violation extraction: one early-stopping scan for ALL
-violated map expectations must report the same violations as the
-per-expectation bounded jobs (Options(fuse_violations=False)).
+"""Pass-2 violation detail: COMPLETE's fused row path (one early-stopping
+scan for ALL violated map expectations) must report the same violations as
+the per-expectation bounded jobs (Options(fuse_violations=False)), and the
+SUMMARY value query must report exact, natively ordered value counts.
 
-Partial lists are k-SAMPLES of the violation multiset — WHICH k appear is
-engine-arbitrary in both plans (the per-expectation path takes first-k in
+BASIC's partial list is a k-SAMPLE of the violation multiset — WHICH k
+appear is engine-arbitrary (the per-expectation path takes first-k in
 partition order), so the tests assert sample validity against the full
 violation multiset plus exact equality of everything deterministic:
 counts, success, full COMPLETE lists, index lists, rows, value counts."""
@@ -131,7 +132,7 @@ def test_fused_matches_per_expectation(spark, frame, rf, solo_complete):
 
 
 def test_fused_partial_counts_exact(spark, frame):
-    """SUMMARY counts from the fused groupBy must be exact per value."""
+    """SUMMARY counts from the value query must be exact per value."""
     res = validate(frame, _suite(), result_format="SUMMARY",
                    options=Options(fuse_violations=True))
     in_set = next(
@@ -193,8 +194,9 @@ def test_fused_respects_partial_cap(spark):
 
 
 def test_adaptive_policy(spark, frame, monkeypatch):
-    """fuse_violations=None picks the plan from pass-1 statistics: solo
-    below the thresholds, fused above (rows OR violated-expectation count)."""
+    """fuse_violations=None picks COMPLETE's row path from pass-1
+    statistics: solo below the thresholds, fused above (rows OR
+    violated-expectation count)."""
     from great_expectations_spark import validator as vmod
 
     calls = []
@@ -207,16 +209,16 @@ def test_adaptive_policy(spark, frame, monkeypatch):
     monkeypatch.setattr(vmod.SparkValidator, "_collect_violations_fused", spy)
 
     # 200 rows, 5 violated < count threshold -> per-expectation path
-    validate(frame, _suite(), result_format="SUMMARY", options=Options())
+    validate(frame, _suite(), result_format="COMPLETE", options=Options())
     assert calls == []
 
     # rows threshold forced down -> fused path engages
-    validate(frame, _suite(), result_format="SUMMARY",
+    validate(frame, _suite(), result_format="COMPLETE",
              options=Options(fuse_rows_threshold=100))
     assert calls == [5]
 
     # count threshold alone can trigger it
-    validate(frame, _suite(), result_format="SUMMARY",
+    validate(frame, _suite(), result_format="COMPLETE",
              options=Options(fuse_count_threshold=5))
     assert calls == [5, 5]
 
@@ -395,10 +397,11 @@ def test_fused_binary_decimal_rows_and_index(spark, monkeypatch):
 
 
 def test_fused_string_tie_order_matches_native(spark):
-    """>50 count-tied string violations incl. JSON-escaping-sensitive ones
-    ('\"a...' sorts first natively but after 'm' when escaped): the fused
-    window cut must keep the natively-smallest values, matching solo."""
-    vals = [f'"a{i:03d}' for i in range(10)] + [f"m{i:03d}" for i in range(110)]
+    """More count-tied string violations than the cut keeps, incl.
+    JSON-escaping-sensitive ones ('\"a...' sorts first natively but after
+    'm' when escaped): the value query's cut must keep the natively-smallest
+    values — checked against a Python sort of the collected column."""
+    vals = [f'"a{i:03d}' for i in range(10)] + [f"m{i:03d}" for i in range(300)]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, s string")
     suite = (
         ExpectationSuite("ties")
@@ -407,14 +410,25 @@ def test_fused_string_tie_order_matches_native(spark):
         .add("expect_column_values_to_be_between", column="i", max_value=-1,
              mostly=0.001)
     )
-    fused = validate(df, suite, result_format="SUMMARY",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="SUMMARY",
-                    options=Options(fuse_violations=False))
-    f_counts = fused.results[0].result["partial_unexpected_counts"]
-    s_counts = solo.results[0].result["partial_unexpected_counts"]
-    assert f_counts == s_counts
-    assert [d["value"] for d in f_counts][:10] == [f'"a{i:03d}' for i in range(10)]
+    res = validate(df, suite, result_format="SUMMARY").results[0].result
+    expected = sorted(r["s"] for r in df.select("s").collect())[:20]
+    assert res["partial_unexpected_counts"] == [
+        {"value": v, "count": 1} for v in expected]
+    assert res["partial_unexpected_list"] == expected
+    assert expected[:10] == [f'"a{i:03d}' for i in range(10)]
+
+
+def test_numeric_tie_order_is_numeric(spark):
+    """300 distinct ints, each violated once: the reported top 20 are the
+    numerically smallest, 0..19 (ordering by text would put "10" before
+    "9" and "100" before "11")."""
+    df = spark.range(300).select(F.col("id").cast("int").alias("x")).repartition(3)
+    suite = ExpectationSuite("num-ties").add(
+        "expect_column_values_to_be_between", column="x", max_value=-1)
+    res = validate(df, suite, result_format="SUMMARY").results[0].result
+    assert res["partial_unexpected_counts"] == [
+        {"value": i, "count": 1} for i in range(20)]
+    assert res["partial_unexpected_list"] == list(range(20))
 
 
 def test_fused_typed_encoding_rows_and_index(spark, monkeypatch):
@@ -520,3 +534,100 @@ def test_fused_timestamp_ntz_in_containers(spark, monkeypatch):
     f_list = fused.results[0].result["unexpected_list"]
     assert f_list == solo.results[0].result["unexpected_list"]
     assert f_list and all(v == ["2024-06-01T12:00:00.000500"] for v in f_list)
+
+
+def test_summary_detail_is_layout_independent(spark):
+    """SUMMARY partial_unexpected_counts AND partial_unexpected_list are
+    identical under repartition(1), repartition(7) and a shuffled row
+    order — count ties, NULL values, pairs and duplicates included."""
+    rows = [
+        (i, i % 9, None if i % 4 == 0 else f"v{i % 30}", i % 50)
+        for i in range(600)
+    ]
+    base = spark.createDataFrame(rows, "x int, y int, s string, u int")
+    suite = (
+        ExpectationSuite("layout")
+        .add("expect_column_values_to_be_between", column="x", max_value=-1)
+        .add("expect_column_values_to_be_in_set", column="s", value_set=["v1"])
+        .add("expect_column_values_to_not_be_null", column="s")
+        .add("expect_column_pair_values_a_to_be_greater_than_b",
+             column_A="y", column_B="u")
+        .add("expect_column_values_to_be_unique", column="u")
+        .add("expect_column_values_to_be_increasing", column="y")
+    )
+
+    def detail(df):
+        res = validate(df, suite, result_format="SUMMARY")
+        return [(r.result["partial_unexpected_counts"],
+                 r.result["partial_unexpected_list"]) for r in res.results]
+
+    layouts = [base.repartition(1), base.repartition(7),
+               base.orderBy(F.rand(seed=3))]
+    # the monotonic check depends on row order by definition; the rest
+    # must not move with the layout
+    got = [detail(df)[:-1] for df in layouts]
+    assert got[0] == got[1] == got[2]
+    for counts, sample in got[0]:
+        assert len(sample) == 20 and len(counts) <= 20
+
+
+def test_failed_value_query_is_recorded_not_fanned_out(spark, tmp_path, monkeypatch):
+    """Fault injection: a UDF that raises on violating rows once pass 2
+    starts. SUMMARY records one {phase: pass2, error: <class>} degradation
+    instead of re-running a job per expectation, BASIC records one per
+    expectation, COMPLETE's fused row path records its fallback, and counts
+    and success stay exact."""
+    import os
+
+    from great_expectations_spark import validator as vmod
+
+    flag = str(tmp_path / "fail")
+
+    @F.udf("int")
+    def guarded(v):
+        if v > 10 and os.path.exists(flag):
+            raise ValueError("injected fault")
+        return v
+
+    df = spark.range(100).select(guarded(F.col("id").cast("int")).alias("x"))
+    suite = (
+        ExpectationSuite("fault")
+        .add("expect_column_values_to_be_between", column="x", max_value=10)
+        .add("expect_column_values_to_be_between", column="x", max_value=50)
+    )
+    clean = validate(df, suite, result_format="SUMMARY")
+    assert "degradations" not in clean.meta
+
+    calls = []
+    for name in ("_collect_value_counts", "_collect_rows"):
+        orig = getattr(vmod.SparkValidator, name)
+
+        def armed(self, *args, _orig=orig, _name=name):
+            calls.append(_name)
+            open(flag, "w").close()
+            return _orig(self, *args)
+
+        monkeypatch.setattr(vmod.SparkValidator, name, armed)
+
+    def armed_run(rf):
+        try:
+            return validate(df, suite, result_format=rf,
+                            options=Options(fuse_violations=True))
+        finally:
+            os.remove(flag)
+
+    summary, basic, complete = map(armed_run, ("SUMMARY", "BASIC", "COMPLETE"))
+
+    assert calls == ["_collect_value_counts", "_collect_rows",
+                     "_collect_value_counts", "_collect_rows"]
+    (entry,) = summary.meta["degradations"]
+    assert entry["phase"] == "pass2" and entry["error"]
+    assert [d["phase"] for d in basic.meta["degradations"]] == ["pass2", "pass2"]
+    assert [d["phase"] for d in complete.meta["degradations"]] == [
+        "pass2", "pass2_rows", "pass2", "pass2"]
+    for res in (summary, basic, complete):
+        for got, want in zip(res.results, clean.results):
+            assert got.success == want.success is False
+            assert got.result["unexpected_count"] == want.result["unexpected_count"]
+            assert "partial_unexpected_list" not in got.result
+            assert "partial_unexpected_counts" not in got.result

@@ -356,3 +356,70 @@ def test_rule_profiler_real_batches_single_exchange(spark, tmp_path):
         assert n_exchanges == 2, plan
         assert plan.count("hashpartitioning") == 1, plan
         assert _partial_agg_before_exchange(plan), plan
+
+
+def _pass2_suite(n_map: int):
+    """n_map violated map expectations plus one violated uniqueness."""
+    from great_expectations_spark import ExpectationSuite
+
+    suite = ExpectationSuite(f"pass2-{n_map}")
+    checks = [
+        ("expect_column_values_to_be_between", {"column": "x", "max_value": -1}),
+        ("expect_column_values_to_be_in_set", {"column": "s", "value_set": ["t1"]}),
+        ("expect_column_values_to_be_between", {"column": "y", "min_value": 5}),
+        ("expect_column_values_to_not_be_null", {"column": "z"}),
+        ("expect_column_value_lengths_to_be_between",
+         {"column": "s", "max_value": 2}),
+    ]
+    for etype, kwargs in checks[:n_map]:
+        suite.add(etype, **kwargs)
+    return suite.add("expect_column_values_to_be_unique", column="u")
+
+
+def test_summary_pass2_is_one_value_query(spark, monkeypatch):
+    """SUMMARY pass 2 submits the same Spark jobs for 2 and for 5 violated
+    map expectations (jobs counted by id from the status tracker: SUMMARY
+    minus BOOLEAN_ONLY), fewer than one per violated expectation, and its
+    value query cuts each expectation's groups with a Partial
+    WindowGroupLimit BELOW the exchange, so no expectation's distinct bad
+    values all funnel into one task."""
+    from great_expectations_spark import validate
+    from great_expectations_spark import validator as vmod
+
+    df = spark.range(3000).select(
+        F.col("id").cast("int").alias("x"),
+        (F.col("id") % 13).cast("int").alias("y"),
+        F.concat(F.lit("t"), (F.col("id") % 37).cast("string")).alias("s"),
+        F.when(F.col("id") % 5 > 0, F.col("id")).alias("z"),
+        (F.col("id") % 700).alias("u"),
+    )
+    status = spark.sparkContext.statusTracker()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(rf, n_map):
+        first = dag.numTotalJobs()
+        res = validate(df, _pass2_suite(n_map), result_format=rf)
+        assert not any(r.success for r in res.results)
+        ids = range(first, dag.numTotalJobs())
+        assert all(status.getJobInfo(i) is not None for i in ids)
+        return len(ids)
+
+    queries = []
+    orig = vmod.SparkValidator._value_counts_query
+
+    def spy(self, violated, metrics):
+        query, decoders = orig(self, violated, metrics)
+        queries.append(query)
+        return query, decoders
+
+    monkeypatch.setattr(vmod.SparkValidator, "_value_counts_query", spy)
+    jobs("SUMMARY", 5)  # warm-up
+    pass2 = {n: jobs("SUMMARY", n) - jobs("BOOLEAN_ONLY", n) for n in (2, 5)}
+    assert pass2[2] == pass2[5] < 5 + 1, pass2
+
+    plan = queries[-1]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    exchange = final.index("Exchange hashpartitioning(eid")
+    partial = re.search(r"WindowGroupLimit .*, Partial", final)
+    assert partial and partial.start() > exchange, final
+    assert "MapInPandas" not in final and "PythonUDF" not in final
